@@ -46,12 +46,20 @@ final class SessionMemo[V](maxSessions: Int = 8, onEvict: V => Unit = (_: V) => 
       try onEvict(v) catch { case _: Exception => () }))
   }
 
-  /** Drop ONE memoized key for `s`, running `onEvict` on its value —
-    * for throwaway keys (a benchmark's temp replica dir) whose cached
-    * values must not outlive the data they were built from. */
+  /** Drop ONE memoized key for `s`, running `onEvict` on its value. */
   def remove(s: SparkSession, key: String): Unit = synchronized {
     Option(bySession.get(s)).foreach(inner =>
       inner.remove(key).foreach(v => try onEvict(v) catch { case _: Exception => () }))
+  }
+
+  /** Drop every key of `s` that equals `dir` or names a path under it
+    * (`dir/documents.parquet`, a `dir/` glob), running `onEvict` on
+    * each value. */
+  private[core] def removeUnder(s: SparkSession, dir: String): Unit = synchronized {
+    val root = dir.stripSuffix("/")
+    Option(bySession.get(s)).foreach(inner =>
+      inner.keys.filter(k => k == root || k.startsWith(root + "/")).toSeq
+        .foreach(remove(s, _)))
   }
 
   // register LAST: a construction-ordered publish — the registry must never
@@ -86,8 +94,17 @@ object SessionMemo {
     * retired session's cached blocks free immediately instead of aging
     * out of the 8-session LRU. Call right before discarding a session
     * obtained from `newSession()` / `getOrCreate()`. */
-  def release(s: SparkSession): Unit = {
-    val live = synchronized { instances.flatMap(r => Option(r.get)).toSeq }
-    live.foreach(_.clear(s))
+  def release(s: SparkSession): Unit = live().foreach(_.clear(s))
+
+  /** Corpus-dir eviction for callers that build a THROWAWAY copy of a
+    * corpus dir: drops, across ALL memos, every entry of `s` keyed by
+    * `dir` or by a path under it, so persisted frames and index sidecars
+    * built from the copy neither stay pinned for the session's lifetime
+    * nor recompute a lost block against a deleted path. Other sessions'
+    * entries and other keys are untouched. */
+  def evictDir(s: SparkSession, dir: String): Unit = live().foreach(_.removeUnder(s, dir))
+
+  private def live(): Seq[SessionMemo[_]] = synchronized {
+    instances.flatMap(r => Option(r.get)).toSeq
   }
 }

@@ -34,11 +34,14 @@ object TableIO {
     * `file://…`) rather than a plain local path. */
   def hasScheme(root: String): Boolean = root.matches("^[a-zA-Z][a-zA-Z0-9+.-]*://.*")
 
-  /** The active Spark session's Hadoop configuration when one exists (so
-    * `spark.hadoop.*` settings — s3a credentials, endpoints, HA namenodes —
-    * reach every FileSystem the engine opens), else Hadoop defaults. */
+  /** The active Spark session's Hadoop configuration — or the default
+    * session's, for threads with no active session such as shutdown hooks —
+    * so `spark.hadoop.*` settings (s3a credentials, endpoints, HA
+    * namenodes) reach every FileSystem the engine opens; else Hadoop
+    * defaults. */
   def hadoopConf(): org.apache.hadoop.conf.Configuration =
     org.apache.spark.sql.SparkSession.getActiveSession
+      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
       .map(_.sessionState.newHadoopConf())
       .getOrElse(new org.apache.hadoop.conf.Configuration())
 
@@ -51,7 +54,8 @@ object TableIO {
     * CAS for two processes sharing a local warehouse). */
   def forRoot(root: String,
               conf: org.apache.hadoop.conf.Configuration = null): TableIO = {
-    val c = Option(conf).getOrElse(hadoopConf())
+    // only the Hadoop bindings read the conf: a local root builds none
+    def c = Option(conf).getOrElse(hadoopConf())
     if (sys.env.get("GRAFT_TABLE_IO").contains("hadoop")) new HadoopTableIO(root, c)
     else if (root.startsWith("file:"))
       new LocalTableIO(new org.apache.hadoop.fs.Path(root).toUri.getPath)

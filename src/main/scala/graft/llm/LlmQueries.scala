@@ -386,10 +386,8 @@ object LlmQueries {
     * filter-build collect job; the probe enters the plan as ONE typedLit
     * array literal instead of a 2048-element parsed expression tree (the
     * giant-literal re-ANALYSIS cost CLAUDE.md flags — the d3 sigCache
-    * lesson). Consumers: d18_bloom_decontaminate — Bench evicts after its
-    * reps. */
+    * lesson). Consumers: d18_bloom_decontaminate. */
   private val bloomCache = new graft.core.SessionMemo[(Array[Long], Long)]()
-  def evictBloom(s: SparkSession, dir: String): Unit = bloomCache.remove(s, dir)
 
   private val sigCache = new graft.core.SessionMemo[DataFrame](onEvict = _.unpersist())
 
@@ -493,13 +491,25 @@ object LlmQueries {
     * FsUtil exit sweep; each build writes a FRESH dir and never reads a
     * pre-existing one (no cross-run caching). */
   private def sidecarDir(s: SparkSession, what: String): String = {
-    val side = sys.env.get("SPARK_GRAFT_INDEX_DIR")
-      .orElse(s.conf.getOption("graft.index.root"))
-      .map(_.stripSuffix("/"))
+    val side = sidecarRoot(sys.env.get("SPARK_GRAFT_INDEX_DIR"),
+        s.conf.getOption("graft.index.root"), s.sparkContext.master)
       .map(r => s"$r/graft-$what-sidecar-${java.util.UUID.randomUUID()}")
       .getOrElse(java.nio.file.Files.createTempDirectory(s"graft-$what-sidecar-").toString)
     graft.core.FsUtil.deleteOnExit(side)
     side
+  }
+
+  /** The configured index root, or None for a driver temp dir. A temp dir
+    * on the driver's disk is unreachable from executors on a cluster, so a
+    * non-local master without a root is refused up front instead of
+    * failing later inside an executor's sidecar read. */
+  private[graft] def sidecarRoot(envRoot: Option[String], confRoot: Option[String],
+                                 master: String): Option[String] = {
+    val root = envRoot.orElse(confRoot).map(_.stripSuffix("/"))
+    require(root.nonEmpty || master.startsWith("local"),
+      s"index sidecars on master '$master' need a root every executor can reach: " +
+        "set SPARK_GRAFT_INDEX_DIR or the spark conf graft.index.root")
+    root
   }
 
   /** Test/spec accessor: the trained cell assignment (vec_id, v,
@@ -825,7 +835,6 @@ object LlmQueries {
     * probe side — each pay only the narrow map-side cosine pass, never a
     * second (label, dim) centroid shuffle. */
   private val centroidCache = new graft.core.SessionMemo[DataFrame](onEvict = _.unpersist())
-  def evictLabelCentroids(s: SparkSession, dir: String): Unit = centroidCache.remove(s, dir)
   private def labelCentroids(s: SparkSession, dir: String): DataFrame =
     centroidCache.getOrElseUpdate(s, dir)(
       emb(s, dir).select(col("label"), posexplode(col("v")).as(Seq("pos", "x")))
@@ -851,8 +860,8 @@ object LlmQueries {
         r.getAs[Double]("sim")).toMap
 
   /** The MMR greedy over the collected decision values — ONE definition
-    * shared by r3 and Bench's retrieval-quality block, so the bench never
-    * re-executes the candidate generation just to replay the selection.
+    * shared by r3 and the retrieval-quality floors, so the quality check
+    * never re-executes the candidate generation to replay the selection.
     * Round 1 maximizes pure relevance (empty-set diversity term); later
     * rounds the λ=0.5 marginal score. Ties → smaller vec_id. Explicit
     * Double.compare, not key negation: under negation -0.0 < 0.0 and NaN
@@ -920,9 +929,9 @@ object LlmQueries {
 
   /** Parametric multi-probe IVF: the `ann_ivf_probe2` plan with `nProbes`
     * cells searched per query. `ann_ivf_probe2` delegates here with
-    * [[IvfProbes]]; Bench sweeps probes 1..4 through it to record the
-    * recall-vs-probe curve — the recall/speed lever a deployment tunes has
-    * to be measured, not assumed. Probe selection is a broadcast(k cells)
+    * [[IvfProbes]]; the sf0.1 quality floors sweep probes 1..4 through it
+    * for the recall-vs-probe curve — the recall/speed lever a deployment
+    * tunes has to be measured, not assumed. Probe selection is a broadcast(k cells)
     * ranking per query; candidates stay cell-local at every probe count. */
   private[graft] def ivfProbeAt(s: SparkSession, dir: String, nProbes: Int): DataFrame = {
     val (cents, assigned) = ivfIndex(s, dir)
@@ -966,7 +975,7 @@ object LlmQueries {
       .select(col("vec_id"), col("best.v").as("v"), col("best.centroid_id").as("centroid_id"))
   }
 
-  /** Bench probe: the ann_ivf_probe2 plan run over the MERGED index
+  /** Quality probe: the ann_ivf_probe2 plan run over the MERGED index
     * (trained corpus assignment ∪ incrementally added batch). Its recall
     * against [[incrementalBrute]] is the quality cost of admission without
     * retrain — the number a production FAISS deployment watches to decide
@@ -984,7 +993,7 @@ object LlmQueries {
               col("payload").as("centroid_id"))
   }
 
-  /** Bench truth for [[incrementalProbe]]: exact brute-force top-3 over the
+  /** Ground truth for [[incrementalProbe]]: exact brute-force top-3 over the
     * same merged vector set (corpus ∪ batch). */
   private[graft] def incrementalBrute(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
@@ -1001,9 +1010,9 @@ object LlmQueries {
 
   /** Parametric PQ search: the `ann_pq_topk` plan with a caller-chosen
     * refine cut (candidates kept per query before the exact re-rank).
-    * `ann_pq_topk` delegates here with [[PqCandidates]]; Bench sweeps the
-    * cut to record the refine-factor-vs-recall curve — the FAISS refine
-    * lever, measured instead of assumed. The survivor set stays bounded
+    * `ann_pq_topk` delegates here with [[PqCandidates]]; the sf0.1 quality
+    * floors sweep the cut for the refine-factor-vs-recall curve — the
+    * FAISS refine lever, measured instead of assumed. The survivor set stays bounded
     * (queries × candidates) at every sweep point, so plan shape never
     * changes — only the breadth of the broadcast join-back. */
   private[graft] def pqTopkAt(s: SparkSession, dir: String, candidates: Int): DataFrame = {
@@ -1206,108 +1215,20 @@ object LlmQueries {
           expr("graft_simhash_bands(transform(words, w -> md5(w)))").as("bands"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
-  /** Evict everything this module memoized for (session, dir) — for
-    * callers that build a THROWAWAY copy of a corpus dir (the bench's 4×
-    * scale replica): without this, persisted signature/index frames keyed
-    * by the deleted temp dir stay pinned for the session's lifetime and
-    * any lost-block recompute would read a path that no longer exists. */
+  /** Evict everything memoized for (session, dir) — for callers that
+    * build a THROWAWAY copy of a corpus dir: every [[graft.core.SessionMemo]]
+    * entry keyed by the dir or a path under it (persisted frames, index
+    * sidecars, the JSONL export), plus the dir-keyed stream sinks. */
   def evictDir(s: SparkSession, dir: String): Unit = {
-    sigCache.remove(s, dir)
-    simSigCache.remove(s, dir)
-    clusterCache.remove(s, dir)
-    ivfCache.remove(s, dir)
-    sqCache.remove(s, dir)
-    pqCache.remove(s, dir)
-    lshCache.remove(s, dir)
-    bloomCache.remove(s, dir)
-    centroidCache.remove(s, dir)
-    CorpusQueries.evictCmsVocab(s, dir)
-    CorpusQueries.evictFunnel(s, dir)
-    CorpusQueries.evictLmToks(s, dir)
-    CorpusQueries.evictBpeMerges(s, dir)
-    CorpusQueries.evictLangProfiles(s, dir)
-    CorpusQueries.evictDsirLm(s, dir)
-    // d12's sink AND staging replica are dir-keyed (session-independent
-    // files): drop the entries and their parquet so a reused dir path
-    // recomputes instead of serving a stale pre-change pair set, and a
-    // throwaway dir doesn't leave its staging replica on disk until JVM
-    // exit
-    streamDupSink.synchronized {
-      def drop(cache: scala.collection.mutable.Map[String, String]): Unit =
-        cache.keys.filter(k => k == dir || k.startsWith(dir + "@")).toSeq
-          .foreach { k =>
-            cache.remove(k).foreach(path =>
-              try graft.core.FsUtil.deleteRecursively(path)
-              catch { case scala.util.control.NonFatal(_) => () })
-          }
-      drop(streamDupSinkCache)
-      drop(streamStageCache)
-      drop(bitextSinkCache)
-      drop(qaSinkCache)
-      // w6/w7 staging replicas + checkpoints ride a parallel aux map
-      sinkAuxCache.keys.filter(k => k.startsWith(dir + "@")).toSeq.foreach { k =>
-        sinkAuxCache.remove(k).foreach(_.foreach(p =>
-          try graft.core.FsUtil.deleteRecursively(p)
-          catch { case scala.util.control.NonFatal(_) => () }))
-      }
-    }
+    graft.core.SessionMemo.evictDir(s, dir)
+    dropSinks(dir)
   }
-
-  /** Family-scoped eviction, keyed by the memo that backs each query
-    * family. A long bench sweep (or any batch driver that runs query
-    * families in sequence) calls the hook for a cache as soon as its LAST
-    * consumer finishes, releasing executor storage memory for the
-    * families still to run — holding every index for the whole sweep was
-    * measured pressuring unrelated queries (round-10 tpch_q5/q7 warm
-    * medians). Consumers per cache:
-    *   - signatures (sigCache): d2, d4, d6, d7, d9, d11, d12_state_audit,
-    *     d16, d18, d19, d20, d21, d22, t3, t15, t15_funnel_ppl, t26_source_overlap
-    *   - simhash signatures (simSigCache): d10, d11
-    *   - dedup clusters (clusterCache): d6, d7, d20
-    *   - IVF index (ivfCache): ann_ivf_probe, ann_ivf_probe2,
-    *     ann_ivfpq_topk, ann_ivfsq_topk, ann_incremental_add, d13_semdedup,
-    *     d15_cell_skew_audit, r2_hybrid_retrieve, r5_bitext_mining,
-    *     w6_stream_bitext + w6_mining_audit (via the sink BUILD — dir-keyed,
-    *     so only their first touch trains, but that first touch must come
-    *     before the eviction hook fires), and — since the residual-PQ
-    *     round — every pqCache consumer (ann_pq_topk, e4_pq_error):
-    *     residual codes train against and decode through the trained
-    *     coarse centroids
-    *     (ANY new ivfIndex/sqIndex/pqIndex consumer
-    *     MUST be added to Bench's cacheLastConsumer table too — an omitted
-    *     consumer silently rebuilds the index mid-sweep and re-pins it,
-    *     the exact storage-pressure failure the eviction prevents)
-    *   - SQ codes (sqCache): ann_sq_topk, ann_ivfsq_topk,
-    *     e3_quantization_error
-    *   - PQ codebook+codes (pqCache): ann_pq_topk, ann_ivfpq_topk,
-    *     e4_pq_error
-    *   - LSH tables (lshCache): d3_embedding_neardup (and the bench's
-    *     bucket-recall probe)
-    *   - BPE merge table (CorpusQueries.bpeMergeCache, driver-side Seq):
-    *     t19_bpe_learn, t20_bpe_apply
-    *   - language-ID profiles (CorpusQueries.langProfCache): t23_langid
-    *   - CMS word-count vocab (CorpusQueries.cmsVocabCache): t22_cms_heavy_hitters
-    *   - DSIR LM weights (CorpusQueries.dsirLmCache): t24_dsir_select
-    *   - d18 Bloom filter words (bloomCache, driver-side Array[Long]):
-    *     d18_bloom_decontaminate
-    *   - label centroids (centroidCache): e1_embedding_coherence,
-    *     e2_embedding_outliers
-    *   - r7 first-pass hits (rocchioFirstCache, driver-side Seq):
-    *     r7_rocchio_prf
-    *   - query-vocabulary postings (qpostsCache): r2_hybrid_retrieve */
-  def evictSignatures(s: SparkSession, dir: String): Unit  = sigCache.remove(s, dir)
-  def evictSimSignatures(s: SparkSession, dir: String): Unit = simSigCache.remove(s, dir)
-  def evictClusters(s: SparkSession, dir: String): Unit    = clusterCache.remove(s, dir)
-  def evictIvfIndex(s: SparkSession, dir: String): Unit    = ivfCache.remove(s, dir)
-  def evictSqIndex(s: SparkSession, dir: String): Unit     = sqCache.remove(s, dir)
-  def evictPqIndex(s: SparkSession, dir: String): Unit     = pqCache.remove(s, dir)
 
   /** r7's collected first pass (NumQueries × TopK (q_id, rank,
     * neighbor_id) tuples) per (session, dir): the brute scan executes
     * once per session, not once per invocation — plan inspection and
-    * bench warm reps reuse the bounded decision values. */
+    * warm invocations reuse the bounded decision values. */
   private val rocchioFirstCache = new graft.core.SessionMemo[Seq[(Long, Long, Long)]]()
-  def evictRocchioFirst(s: SparkSession, dir: String): Unit = rocchioFirstCache.remove(s, dir)
 
   /** r2's lexical-arm postings restricted to the QUERY vocabulary, per
     * (session, dir): (doc_id, w) pairs for w in the NumQueries query
@@ -1316,10 +1237,8 @@ object LlmQueries {
     * retrieval tier materializes per query batch). Persisted LAZILY (no
     * job at construction) because the arm reads it twice per execution —
     * the term-df fold and the scoring join — and each lazy reference
-    * would otherwise re-tokenize the whole corpus. Consumers: r2 only;
-    * Bench evicts after its reps (cacheLastConsumer). */
+    * would otherwise re-tokenize the whole corpus. Consumers: r2 only. */
   private val qpostsCache = new graft.core.SessionMemo[DataFrame](onEvict = { df => df.unpersist(); () })
-  def evictQposts(s: SparkSession, dir: String): Unit = qpostsCache.remove(s, dir)
 
   /** d12 family: one parquet sink per (sfDir, variant) — the pair sink
     * (variant "") and the overflow-audit sink (variant "#audit"). File
@@ -1449,6 +1368,22 @@ object LlmQueries {
     stale.nonEmpty
   }
 
+  /** [[evictDir]]'s file side: the dir-keyed stream sinks AND their staging
+    * replicas/checkpoints are session-independent files — drop the entries
+    * and their parquet so a reused dir path recomputes instead of serving
+    * a stale pre-change result, and a throwaway dir doesn't leave its
+    * replicas on disk until JVM exit. */
+  private def dropSinks(dir: String): Unit = streamDupSink.synchronized {
+    def deleteAll(paths: Iterable[String]): Unit = paths.foreach(p =>
+      try graft.core.FsUtil.deleteRecursively(p)
+      catch { case scala.util.control.NonFatal(_) => () })
+    def ofDir(k: String) = k == dir || k.startsWith(dir + "@")
+    Seq(streamDupSinkCache, streamStageCache, bitextSinkCache, qaSinkCache).foreach { cache =>
+      cache.keys.filter(ofDir).toSeq.foreach(k => deleteAll(cache.remove(k)))
+    }
+    sinkAuxCache.keys.filter(ofDir).toSeq.foreach(k => deleteAll(sinkAuxCache.remove(k).toSeq.flatten))
+  }
+
   /** w7: streaming corpus quality gate — t14's classifier run per
     * arriving shard, the admission QA a streaming ingestion pipeline
     * keeps in front of the corpus (score each incoming doc map-side,
@@ -1554,7 +1489,7 @@ object LlmQueries {
 
   private def streamBitextSink(s: SparkSession, dir: String): String = streamDupSink.synchronized {
     // keyed by dir@embeddings-stamp (the d12 discipline) and guarded by the
-    // SAME monitor evictDir's drop() takes, so build and evict can never
+    // SAME monitor evictDir's dropSinks() takes, so build and evict can never
     // race on the map. The stamp protects the SESSION-INDEPENDENT file
     // sink (a fresh JVM must not serve a sink mined from a replaced
     // corpus); in-session invalidation after an in-place regeneration is
@@ -1565,7 +1500,7 @@ object LlmQueries {
     // consistent even without an evictDir call, whenever a prior build's
     // key makes the regeneration detectable).
     val key = s"$dir@${fileStamp(dir, "embeddings.parquet")}"
-    if (dropStaleSinkKeys(bitextSinkCache, dir, key)) evictIvfIndex(s, dir)
+    if (dropStaleSinkKeys(bitextSinkCache, dir, key)) ivfCache.remove(s, dir)
     bitextSinkCache.getOrElseUpdate(key, {
       graft.functions.GraftFunctions.ensureRegistered(s)
       val (cents, assigned) = ivfIndex(s, dir)
@@ -1623,8 +1558,8 @@ object LlmQueries {
   /** The SINGLE-TABLE hyperplane-LSH bucketed embedding frame —
     * ann_lsh_nn's generator. Its planes are [[lshTabled]]'s table 0
     * (plane ids 0..hp−1), so the ANN bucket ids and d3's reported
-    * `bucket` column stay the same id space; d3 and the bench's
-    * bucket-locality probe use the multi-table [[lshTabled]] /
+    * `bucket` column stay the same id space; d3 and the
+    * bucket-locality recall probe use the multi-table [[lshTabled]] /
     * [[lshTablePairs]]. Plane count derived from corpus size
     * ([[hyperplanesFor]]). */
   private def lshBucketed(s: SparkSession, dir: String): DataFrame = {
@@ -1659,7 +1594,6 @@ object LlmQueries {
     * derivation ([[hyperplane]] components are dyadic rationals exactly
     * expressible in SQL), bit-for-bit. */
   private val lshCache = new graft.core.SessionMemo[DataFrame](onEvict = { df => df.unpersist(); () })
-  def evictLshTables(s: SparkSession, dir: String): Unit = lshCache.remove(s, dir)
 
   private def lshTabled(s: SparkSession, dir: String): DataFrame =
     lshCache.getOrElseUpdate(s, dir) {
@@ -1686,7 +1620,7 @@ object LlmQueries {
     }
 
   /** Multi-table bucket-local pairs over a [[lshTabled]] frame — d3's
-    * generator, also the bench's bucket-locality probe. Candidates are
+    * generator, also the bucket-locality recall probe. Candidates are
     * pairs sharing a bucket in ANY of the [[LshTables]] tables: one
     * explode (L rows per vector), ONE shuffle on the (table, bucket) key
     * — exactly d2's band-join shape, never all-pairs, candidate volume
@@ -1706,7 +1640,7 @@ object LlmQueries {
   }
 
   /** Multi-probe cell-local candidate pairs over the trained IVF index —
-    * d13's generator, also the bench's cell-locality probe. Each vector
+    * d13's generator, also the cell-locality recall probe. Each vector
     * searches its own cell PLUS its [[SemDeDupProbes]]-1 next-nearest
     * trained cells (the recorded IVF probe-curve lever applied to the
     * dedup pair pass). The extra cells come from ONE bounded graft_topk
@@ -1750,10 +1684,10 @@ object LlmQueries {
   private def pairSimExpr: String =
     s"${dot("v", "ov")} / (sqrt(vn2) * sqrt(on2))"
 
-  /** Exact embedding-space ground truth for the bench's dedup-recall
-    * block: vectors with at least one OTHER vector at cosine ≥ tau, from
+  /** Exact embedding-space ground truth for the dedup-recall floors:
+    * vectors with at least one OTHER vector at cosine ≥ tau, from
     * a brute-force all-pairs pass. Deliberately O(N²) — this is the
-    * bench-side oracle the approximate families (d3 bucket-local, d13
+    * oracle the approximate families (d3 bucket-local, d13
     * cell-local) are measured against, not a pipeline operator. */
   private[graft] def exactCosineDupVectors(s: SparkSession, dir: String,
                                            tau: Double = 0.8): Set[Long] = {
@@ -1766,11 +1700,11 @@ object LlmQueries {
       .distinct().collect().map(_.getLong(0)).toSet
   }
 
-  /** Parametric detection set for the bench's dedup-recall block: the
+  /** Parametric detection set for the dedup-recall floors: the
     * vec_ids the CELL-LOCAL candidate generator (d13's [[semProbePairs]]
     * — the literal production generator, not a copy) detects as
     * cosine-≥tau duplicates. The production operator fixes tau = 0.8; the
-    * bench probes at a tau where the synthetic corpus actually HAS
+    * recall probe runs at a tau where the synthetic corpus actually HAS
     * duplicates, isolating the recall cost of cell locality (the only
     * approximation — the cosine itself is exact). */
   private[graft] def cellDupVectorsAt(s: SparkSession, dir: String, tau: Double): Set[Long] =
@@ -2925,8 +2859,8 @@ object LlmQueries {
       // cell boundary. Candidates stay cell-local (2 cells/query — the
       // scored set merely doubles); probe selection is a broadcast(k)
       // ranking, so the plan shape is unchanged at corpus scale. The
-      // parametric [[ivfProbeAt]] carries the plan; Bench sweeps it over
-      // probes 1..4 for the recall curve.
+      // parametric [[ivfProbeAt]] carries the plan; the quality floors
+      // sweep it over probes 1..4 for the recall curve.
       ivfProbeAt(s, dir, IvfProbes)
     },
 
@@ -3072,8 +3006,8 @@ object LlmQueries {
       // broadcast packed codebook inside the scan — ann_pq_topk's ADC),
       // exact-re-rank the bounded survivors. The two pruning axes multiply
       // — cells/total of the corpus touched × 4 bytes/vector scanned —
-      // the densest index this family ships; recall is recorded next to
-      // ivfsq's in the bench.
+      // the densest index this family ships; its recall floor sits next
+      // to ivfsq's in LlmSpec.
       val e = emb(s, dir)
       val (cents, assigned) = ivfIndex(s, dir)
       val (bkm, codes)      = pqIndex(s, dir)

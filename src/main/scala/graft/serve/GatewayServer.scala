@@ -594,9 +594,12 @@ final class GatewayServer(
       }
     // one atomic batch: the whole bulk admits or rejects together (S2),
     // one lock pass + one WAL flush for the whole batch
-    val offsets = hot.writeBulk(topic, records)
+    val written = hot.writeBulk(topic, records)
+    val offsets = written.map(_._1)
     metrics.inc("zombi_writes_total", offsets.size.toLong)
     metrics.incLabelled("zombi_writes_by_topic_total", s"""topic="${escape(topic)}"""", offsets.size.toLong)
+    val dups = written.count(_._2)
+    if (dups > 0) metrics.inc("zombi_duplicate_writes_total", dups.toLong)
     metrics.observeMs("zombi_write_latency_ms", (System.nanoTime() - t0) / 1e6)
     sendJson(ex, 202, s"""{"offsets":[${offsets.mkString(",")}],"count":${offsets.size},"table":"${escape(topic)}"}""")
   }

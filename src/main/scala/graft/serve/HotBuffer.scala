@@ -106,14 +106,14 @@ final class HotBuffer(wal: Option[WriteAheadLog] = None) {
     * lock convoy was the burst-load worst-cycle p99. Durability is
     * unchanged: the batch is WAL-appended before this returns (before the
     * 202 ack); duplicates return their original offsets and are not
-    * re-logged. */
+    * re-logged. Returns (offset, isDuplicate) per record, like [[write]]. */
   def writeBulk(topic: String,
-                records: Seq[(Array[Byte], Int, Long, Option[String])]): Seq[Long] = synchronized {
+                records: Seq[(Array[Byte], Int, Long, Option[String])]): Seq[(Long, Boolean)] = synchronized {
     val fresh = Seq.newBuilder[StoredEvent]
     val offs = records.map { case (payload, partition, ts, key) =>
-      val (off, _, e) = insert(topic, partition, payload, ts, key)
+      val (off, dup, e) = insert(topic, partition, payload, ts, key)
       e.foreach(fresh += _)
-      off
+      (off, dup)
     }
     val fs = fresh.result()
     try wal.foreach(_.appendEvents(fs))

@@ -9,8 +9,7 @@ import scala.jdk.CollectionConverters._
   * (`/root/reference/testing_strategy.md:496-575`, `tools/zombi_load.py`):
   * sustained HTTP load against the WHOLE serving path (gateway → admission
   * → hot buffer [+WAL] → flush → snapshot commit), reporting ev/s and
-  * p50/p99 latency per scenario, where the criterion-style micro-benches in
-  * [[graft.Bench]] measure only the in-JVM storage hot path.
+  * p50/p99 latency per scenario.
   *
   * Scenarios mirror the reference's no-S3 set:
   *

@@ -61,7 +61,7 @@ object JsonlCorpus {
       .option("maxFilesPerTrigger", maxFilesPerTrigger).json(path)
 
   // fixture path per (session, sfDir): the export is built once and reused
-  // across bench reps; evicting a session deletes its export from /tmp
+  // across invocations; evicting a session deletes its export from /tmp
   private val fixture =
     new graft.core.SessionMemo[String](onEvict = graft.core.FsUtil.deleteRecursively(_: String))
 
@@ -69,8 +69,8 @@ object JsonlCorpus {
     "src_jsonl_read" -> { (s, dir) =>
       val out = fixture.getOrElseUpdate(s, dir) {
         val p = java.nio.file.Files.createTempDirectory("graft-jsonl-").toString
-        // session eviction deletes the export, but batch drivers (Verify,
-        // Bench) exit without evicting — also sweep on JVM shutdown (one
+        // session or dir eviction deletes the export, but batch drivers
+        // (Verify) exit without evicting — also sweep on JVM shutdown (one
         // process-wide hook, however many fixtures register)
         graft.core.FsUtil.deleteOnExit(p)
         write(s, dir, p)

@@ -204,14 +204,11 @@ final class StreamIngest(
     * keyed-state facts and only the bootstrap join remains. */
   /** Per-phase flush timing — the reference's flush-duration histograms
     * (`/root/reference/src/metrics/registry.rs`, flusher timings); also
-    * printed per batch when GRAFT_TIMING is set, for throughput triage. */
-  private def timed[T](phase: String, batchId: Long)(f: => T): T = {
+    * the per-layer flush numbers a throughput triage reads. */
+  private def timed[T](phase: String)(f: => T): T = {
     val t0  = System.nanoTime()
     val out = f
-    val ms  = (System.nanoTime() - t0) / 1e6
-    metrics.observeMs(s"graft_flush_phase_ms_$phase", ms)
-    if (sys.env.contains("GRAFT_TIMING"))
-      println(f"[graft-timing] batch=$batchId $phase%-10s ${ms}%.0f ms")
+    metrics.observeMs(s"graft_flush_phase_ms_$phase", (System.nanoTime() - t0) / 1e6)
     out
   }
 
@@ -275,11 +272,11 @@ final class StreamIngest(
         // load, where a single partition's slice is itself huge.
         if (upstreamDeduped) {
           val wm = watermarks()
-          val seq = timed("sequence", batchId) {
+          val seq = timed("sequence") {
             EventLog.assignSequencesPerPartition(deduped, base = wm)
           }
           val sequenced = EventLog.deriveDateHour(seq)
-          timed("write", batchId) {
+          timed("write") {
             EventTable.writeData(EventTable.committedSchema(sequenced), tableRoot, targetFileSize,
                                  precomputedStats = Some(lastStats.getOrElse(Map.empty).toSeq
                                    .map { case (p, (r, b)) => (p, r, b) }),
@@ -297,14 +294,14 @@ final class StreamIngest(
           val cached = deduped.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           try {
             val wm = watermarks()
-            val (seq, stats) = timed("sequence", batchId) {
+            val (seq, stats) = timed("sequence") {
               EventLog.assignSequencesWithStats(cached, base = wm,
                                                 byteColumn = Some("props"),
                                                 rowsHint = lastBatchRows)
             }
             lastStats = Some(stats)
             val sequenced = EventLog.deriveDateHour(seq)
-            timed("write", batchId) {
+            timed("write") {
               EventTable.writeData(EventTable.committedSchema(sequenced), tableRoot, targetFileSize,
                                    precomputedStats = Some(stats.toSeq.map { case (p, (r, b)) => (p, r, b) }),
                                    seqBase = wm,
@@ -318,7 +315,7 @@ final class StreamIngest(
 
     // Marker AFTER the data write: files without a marker are orphans.
     committer.io.put(markerPath(batchId), newPaths.mkString("\n").getBytes("UTF-8"))
-    val withRaw = timed("footers", batchId)(EventTable.collectDataFilesWithRaw(spark, tableRoot, newPaths))
+    val withRaw = timed("footers")(EventTable.collectDataFilesWithRaw(spark, tableRoot, newPaths))
     val written = withRaw.map(_._1)
     lastBatchRows = Some(written.map(_.recordCount).sum) // exact, from footers
     if (upstreamDeduped) lastStats = Some(EventTable.profileOf(withRaw))
@@ -492,9 +489,6 @@ final class IngestMetricsListener(metrics: graft.serve.Metrics)
     metrics.inc("graft_stream_rows_total", event.progress.numInputRows)
     metrics.observeMs("graft_stream_batch_duration_ms",
       Option(event.progress.durationMs.get("triggerExecution")).map(_.toDouble).getOrElse(0.0))
-    if (sys.env.contains("GRAFT_TIMING"))
-      println(s"[graft-timing] trigger=${event.progress.batchId} rows=${event.progress.numInputRows} " +
-        s"durations=${event.progress.durationMs}")
   }
   override def onQueryTerminated(event: QueryTerminatedEvent): Unit =
     metrics.inc("graft_stream_queries_terminated_total")
@@ -613,35 +607,18 @@ object StreamIngest {
 object StreamedTables {
   private val cache = scala.collection.mutable.Map.empty[String, String]
 
-  /** Staging-vs-ingest decomposition of the LAST table build: staging is the
-    * producer simulation (writing the raw burst files the stream consumes),
-    * ingest is the engine (stream pickup → dedup → sequence → write →
-    * commit). The reference's ev/s baseline measures its server ingesting
-    * already-formed requests, so the comparable number is `events /
-    * ingestSec` — surfaced by [[graft.Bench]] alongside the query timings. */
-  @volatile var lastBuild: Option[StreamedTables.BuildStats] = None
-  final case class BuildStats(sfDir: String, events: Long, stagingSec: Double, ingestSec: Double)
-
   def tableRoot(spark: SparkSession, sfDir: String): String = synchronized {
     cache.getOrElseUpdate(
       sfDir, {
         val root    = java.nio.file.Files.createTempDirectory("graft-stream-").toString
         val staging = java.nio.file.Files.createTempDirectory("graft-staging-").toString
-        val t0      = System.nanoTime()
         val schema  = StreamIngest.stageChunks(spark, sfDir, staging, nChunks = 4)
-        val t1      = System.nanoTime()
         // Dedup-state width sized to this deployment's key cardinality
         // (tens of thousands of keys per trigger): 8 state partitions keep
         // the per-trigger store open/commit cost proportional to the work.
         // A cluster ingesting an unbounded key space sizes this to executor
         // count instead — the knob is per-stream, bound to its checkpoint.
         new StreamIngest(spark, root, shufflePartitions = Some(8)).runFileStream(staging, schema)
-        val t2 = System.nanoTime()
-        // input events = staged chunk rows (pre-dedup), footer counts only
-        val events = spark.read.parquet(staging).count()
-        lastBuild = Some(BuildStats(sfDir, events, (t1 - t0) / 1e9, (t2 - t1) / 1e9))
-        if (sys.env.contains("GRAFT_TIMING"))
-          println(f"[graft-timing] s5 build: staging=${(t1 - t0) / 1e9}%.2fs ingest=${(t2 - t1) / 1e9}%.2fs events=$events")
         root
       }
     )

@@ -183,7 +183,6 @@ object EventTable {
       val bytesPerRow = if (pr > 0 && pb > 0) math.max(1L, pb / pr) else 64L
       writer.option("maxRecordsPerFile", math.max(1L, target / bytesPerRow))
     }
-    val tW0 = System.nanoTime()
     writer
       // direct task commit (no job-level rename pass): safe because the
       // staging dir is private and the snapshot references files by NAME —
@@ -197,8 +196,6 @@ object EventTable {
         (if (dateLayout) Seq("partition", "event_date", "bucket")
          else Seq("partition", "bucket")): _*)
       .parquet(stagingAbs.toString)
-    if (sys.env.contains("GRAFT_TIMING"))
-      println(f"[graft-timing]   writeData.parquet ${(System.nanoTime() - tW0) / 1e6}%.0f ms")
 
     // Move staging/partition=P/bucket=B/part-*.parquet → data/partition=P/,
     // prefixing the bucket id so two buckets written by one task (same part
@@ -207,15 +204,10 @@ object EventTable {
     // scheme (file://, hdfs://, s3a://) works; moved files are renames
     // within one store — data is never observable half-moved because the
     // snapshot references files by NAME.
-    val tM0   = System.nanoTime()
-    val moved =
-      if (!graft.iceberg.TableIO.hasScheme(tableRoot) || tableRoot.startsWith("file:"))
-        movePlainLocal(stagingAbs, tableRoot)
-      else
-        moveViaHadoop(spark, stagingAbs, tableRoot)
-    if (sys.env.contains("GRAFT_TIMING"))
-      println(f"[graft-timing]   writeData.move ${(System.nanoTime() - tM0) / 1e6}%.0f ms (${moved.size} files)")
-    moved
+    if (!graft.iceberg.TableIO.hasScheme(tableRoot) || tableRoot.startsWith("file:"))
+      movePlainLocal(stagingAbs, tableRoot)
+    else
+      moveViaHadoop(spark, stagingAbs, tableRoot)
   }
 
   /** Local-root move via java.nio. Hadoop's LocalFileSystem loads POSIX

@@ -123,7 +123,7 @@ class DurabilitySpec extends AnyFunSuite {
     intercept[java.io.IOException] { hot.writeBulk("t", recs) }
     assert(hot.size("t") === 0)
     // sequence counters walked back: the retry reuses 1..N cleanly
-    assert(hot.writeBulk("t", recs) === Seq(1L, 1L, 2L))
+    assert(hot.writeBulk("t", recs) === Seq((1L, false), (1L, false), (2L, false)))
     wal.close()
     val rebuilt = new HotBuffer(Some(new WriteAheadLog(dir)))
     assert(rebuilt.size("t") === 3)

@@ -75,6 +75,22 @@ class GatewaySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(n.get("offsets").elements().hasNext)
   }
 
+  test("S7: idempotent retries inside a bulk request count as duplicate writes") {
+    def dups = server.metrics.counter("zombi_duplicate_writes_total")
+    val before = dups
+    val first = post("/tables/gwbulkdup/bulk",
+      """{"records":[{"payload":"a","partition":0,"idempotency_key":"k1"},{"payload":"b","partition":0,"idempotency_key":"k2"}]}""")
+    assert(first.statusCode() === 202)
+    assert(dups === before, "fresh records are not duplicates")
+    // a retry of k1, a fresh k3, and k3 repeated within the same request
+    val retry = post("/tables/gwbulkdup/bulk",
+      """{"records":[{"payload":"a","partition":0,"idempotency_key":"k1"},{"payload":"c","partition":0,"idempotency_key":"k3"},{"payload":"c","partition":0,"idempotency_key":"k3"}]}""")
+    assert(retry.statusCode() === 202)
+    val offs = mapper.readTree(retry.body()).get("offsets").elements().asScala.map(_.asLong).toSeq
+    assert(offs === Seq(1L, 3L, 3L), "absorbed records return their original offsets")
+    assert(dups === before + 2, "both absorbed records are counted")
+  }
+
   test("S3: protobuf single write with X-Partition header") {
     val bytes = ProtoCodec.encodeEvent(ProtoCodec.ProtoEvent("pb-payload".getBytes, 5000L, Some("pbk")))
     val r = postBytes("/tables/gwpb", bytes, "application/x-protobuf", "X-Partition" -> "3")

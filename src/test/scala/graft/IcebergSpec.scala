@@ -983,4 +983,26 @@ class IcebergSpec extends AnyFunSuite {
       assert(!ls.hasNext, "single-commit table lists exactly one manifest")
     } finally ls.close()
   }
+
+  test("TableIO.hadoopConf falls back to the default session on a thread with no active session") {
+    // shutdown hooks (the sidecar exit sweep) run on threads with no
+    // active session; they must still see the spark.hadoop.* settings
+    import org.apache.spark.sql.SparkSession
+    TestSpark.spark
+    val default = SparkSession.getDefaultSession.get
+    default.conf.set("spark.hadoop.graft.test.marker", "m")
+    try {
+      @volatile var active = true
+      @volatile var seen: Option[String] = None
+      val t = new Thread(() => {
+        SparkSession.clearActiveSession()
+        active = SparkSession.getActiveSession.isDefined
+        val c = TableIO.hadoopConf()
+        seen = Option(c.get("spark.hadoop.graft.test.marker")).orElse(Option(c.get("graft.test.marker")))
+      })
+      t.start(); t.join()
+      assert(!active, "precondition: the thread has no active session")
+      assert(seen === Some("m"), "the default session's spark.hadoop.* settings must reach the conf")
+    } finally default.conf.unset("spark.hadoop.graft.test.marker")
+  }
 }

@@ -346,26 +346,168 @@ class LlmSpec extends AnyFunSuite {
     // for d3 (weaker designs measured short: top-2 cells 0.536,
     // flip-one-plane 0.036 — curves at the constants) — exist to recover
     // the boundary-straddlers; this pins the floor so a locality
-    // regression can never land silently. tau matches the bench's
-    // dedup_recall probe (the production tau 0.8 has no ground truth on
-    // the synthetic fixtures — measured, see Bench.scala).
+    // regression can never land silently. The production tau 0.8 has no
+    // ground truth on the synthetic fixtures (measured), so the probe
+    // runs at tau 0.5. Floors are the recorded sf0.1 readings: a cell
+    // miss is a tau-dup whose every partner lies outside the 12 probed
+    // cells; a bucket miss is a pair split on >= 1 plane in EVERY one of
+    // the 16 tables.
+    atSf01 { (s2, sfDir) =>
+      val tau   = 0.5
+      val exact = LlmQueries.exactCosineDupVectors(s2, sfDir, tau)
+      assert(exact.nonEmpty, "fixture must contain ground-truth dup vectors")
+      def recall(got: Set[Long]): Double = (got & exact).size.toDouble / exact.size
+      assertFloors(Seq(
+        ("semdedup_cell_recall", recall(LlmQueries.cellDupVectorsAt(s2, sfDir, tau)), 929L),
+        ("lsh_bucket_recall", recall(LlmQueries.bucketDupVectorsAt(s2, sfDir, tau)), 857L)))
+    }
+  }
+
+  /** Runs `body` over the sf0.1 bench fixture in a dedicated session,
+    * released in `finally` so its persisted indexes never outlive the
+    * test. The corpus and every generator are deterministic, so the
+    * quality readings below are EXACT across runs: each floor sits at the
+    * recorded sf0.1 reading (per-mille, rounded like the record), and a
+    * reading below it means a band/table/probe count, bucket cap or
+    * candidate cut changed and silently cut recall. */
+  private def atSf01(body: (org.apache.spark.sql.SparkSession, String) => Unit): Unit = {
     val sfDir = "/root/testdata/sf0.1"
     // environment gap ≠ regression: skip (not fail) where the bench
     // fixture is absent — every other LlmSpec test uses in-repo fixtures
     assume(new java.io.File(s"$sfDir/embeddings.parquet").exists,
       s"bench fixture $sfDir not present")
-    val tau   = 0.5
-    val s2 = spark.newSession()
-    try {
-      val exact = LlmQueries.exactCosineDupVectors(s2, sfDir, tau)
-      assert(exact.nonEmpty, "fixture must contain ground-truth dup vectors")
-      def recall(got: Set[Long]): Double = (got & exact).size.toDouble / exact.size
-      val cellR   = recall(LlmQueries.cellDupVectorsAt(s2, sfDir, tau))
-      val bucketR = recall(LlmQueries.bucketDupVectorsAt(s2, sfDir, tau))
-      info(f"cell recall $cellR%.3f, bucket recall $bucketR%.3f over ${exact.size} truth vectors")
-      assert(cellR >= 0.8, f"d13 cell-locality recall $cellR%.3f < 0.8 at tau $tau")
-      assert(bucketR >= 0.8, f"d3 bucket-locality recall $bucketR%.3f < 0.8 at tau $tau")
-    } finally graft.core.SessionMemo.release(s2)
+    val s = spark.newSession()
+    try body(s, sfDir)
+    finally graft.core.SessionMemo.release(s)
+  }
+
+  private def permille(r: Double): Long = math.round(r * 1000)
+
+  /** Asserts each (name, reading, floor‰) and logs every reading first, so
+    * one failure still shows the whole table. */
+  private def assertFloors(readings: Seq[(String, Double, Long)]): Unit = {
+    info(readings.map { case (n, r, _) => f"$n $r%.3f" }.mkString(", "))
+    readings.foreach { case (n, r, floor) =>
+      assert(permille(r) >= floor, f"$n $r%.3f fell below its recorded floor ${floor / 1000.0}%.3f")
+    }
+  }
+
+  /** q_id -> (neighbor_id -> rank) over a (q_id, rank, neighbor_id) frame. */
+  private def ranked(df: org.apache.spark.sql.DataFrame): Map[Long, Map[Long, Long]] =
+    df.select("q_id", "rank", "neighbor_id").collect().groupBy(_.getLong(0))
+      .map { case (q, rs) => q -> rs.map(r => r.getLong(2) -> r.getLong(1)).toMap }
+
+  /** recall@k averaged over the truth's queries, both sides cut to top-k. */
+  private def recallAt(got: Map[Long, Map[Long, Long]], truth: Map[Long, Map[Long, Long]],
+                       k: Int): Double = {
+    val per = truth.toSeq.map { case (q, nr) =>
+      val t = nr.collect { case (n, r) if r <= k => n }.toSet
+      val g = got.getOrElse(q, Map.empty).collect { case (n, r) if r <= k => n }.toSet
+      if (t.isEmpty) 1.0 else g.intersect(t).size.toDouble / t.size
+    }
+    per.sum / math.max(1, per.size)
+  }
+
+  test("sf0.1 ANN recall floors: every index path, the probe curve and the PQ refine curve") {
+    // recall@k of each index path against the corpus brute force — a fast
+    // index with collapsed recall is not an index
+    atSf01 { (s, sfDir) =>
+      def run(name: String) = ranked(SparkEntry.queries(name)(s, sfDir))
+      val brute = run("ann_topk_brute")
+      val k     = LlmQueries.TopK
+      // probe 1 through the same parametric plan as probe 2+, so the curve
+      // points are comparable; more probes may never lose a neighbor
+      val curve = (1 to 4).map(p => recallAt(ranked(LlmQueries.ivfProbeAt(s, sfDir, p)), brute, 3))
+      assert(curve.map(permille) === curve.map(permille).sorted,
+        s"recall-vs-probe curve must be non-decreasing: ${curve.mkString(", ")}")
+      // the PQ refine cut is the binding constraint on PQ recall
+      val pqCurve = Seq(40 -> 900L, 80 -> 975L, LlmQueries.PqCandidates -> 1000L, 200 -> 1000L)
+        .map { case (c, floor) =>
+          (s"pq_refine@$c", recallAt(ranked(LlmQueries.pqTopkAt(s, sfDir, c)), brute, k), floor) }
+      // incremental admission: the probe-2 plan over the MERGED index
+      // against the exact brute truth over the same merged vector set
+      val incremental = recallAt(ranked(LlmQueries.incrementalProbe(s, sfDir)),
+        ranked(LlmQueries.incrementalBrute(s, sfDir)), 3)
+      assertFloors(Seq(
+        ("ivf_probe1", recallAt(run("ann_ivf_probe"), brute, 3), 917L),
+        ("ivf_probe2", recallAt(run("ann_ivf_probe2"), brute, 3), 958L),
+        ("sq_topk", recallAt(run("ann_sq_topk"), brute, k), 1000L),
+        ("pq_topk", recallAt(run("ann_pq_topk"), brute, k), 1000L),
+        ("ivfpq_topk", recallAt(run("ann_ivfpq_topk"), brute, k), 925L),
+        ("ivfsq_topk", recallAt(run("ann_ivfsq_topk"), brute, k), 925L),
+        ("ivf_incremental", incremental, 917L)) ++ pqCurve)
+    }
+  }
+
+  test("sf0.1 dedup recall floors: d2 banding, d10 agreement and d16 straddle recall") {
+    // truth = d4's EXACT n-gram-Jaccard pairs. d2 emits every band
+    // candidate with exact counts, so applying d4's criterion (2·|∩| ≥
+    // |∪|) leaves precision 1 and recall isolates banding loss. d10 uses
+    // a different criterion (hamming <= 3), so its overlap is cross-metric
+    // agreement: the shortfall is pairs whose Jaccard passes while their
+    // 64-bit SimHash differs in >= 4 bits.
+    atSf01 { (s, sfDir) =>
+      def run(name: String) = SparkEntry.queries(name)(s, sfDir)
+      def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+        df.select("doc_a", "doc_b").collect().map { r =>
+          val (a, b) = (r.getLong(0), r.getLong(1)); (math.min(a, b), math.max(a, b))
+        }.toSet
+      val truth = pairSet(run("d4_ngram_jaccard"))
+      assert(truth.nonEmpty, "fixture must contain ground-truth dup pairs")
+      def recall(got: Set[(Long, Long)]): Double = (got & truth).size.toDouble / truth.size
+      // d16: of the TRUE dup pairs straddling the corpus/batch boundary,
+      // does incremental admission reject the batch endpoint?
+      def isInc(id: Long) = id % LlmQueries.IncrEvery == LlmQueries.IncrSlot
+      val straddle = truth.collect { case (a, b) if isInc(a) ^ isInc(b) => if (isInc(a)) a else b }
+      assert(straddle.nonEmpty, "fixture must contain corpus/batch straddling dup pairs")
+      val rejected = run("d16_incremental_dedup").filter("verdict = 'reject'")
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+      assertFloors(Seq(
+        ("d2_pair_recall", recall(pairSet(run("d2_minhash_lsh").filter("inter_cnt * 2 >= union_cnt"))), 1000L),
+        ("d10_jaccard_agreement", recall(pairSet(run("d10_simhash_neardup"))), 846L),
+        ("d16_straddle_recall", (rejected & straddle).size.toDouble / straddle.size, 1000L)))
+    }
+  }
+
+  test("sf0.1 retrieval quality floors: MMR rank-1 parity and diversity, r4 negative hardness") {
+    atSf01 { (s, sfDir) =>
+      // ONE candidate-generation execution feeds both the quality
+      // arithmetic and the shared mmrSelect greedy r3 runs
+      val (relDf, pairsDf) = LlmQueries.mmrCandidateFrames(s, sfDir)
+      val rels = LlmQueries.collectMmrRels(relDf)
+      val sims = LlmQueries.collectMmrSims(pairsDf)
+      def byQuery(rows: Seq[(Long, Long, Long)]): Map[Long, Seq[Long]] =
+        rows.groupBy(_._1).map { case (q, rs) => q -> rs.sortBy(_._2).map(_._3) }
+      def sel(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Long]] =
+        byQuery(df.select("q_id", "rank", "neighbor_id").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq)
+      val mmr   = byQuery(LlmQueries.mmrSelect(rels, sims))
+      val brute = sel(SparkEntry.queries("ann_topk_brute")(s, sfDir))
+      // MMR round 1 is pure relevance: its first pick is the brute nearest
+      val qs = mmr.keySet & brute.keySet
+      assert(qs.nonEmpty)
+      val parity = qs.count(q => mmr(q).headOption == brute(q).headOption).toDouble / qs.size
+      // diversity: mean pairwise cosine among the K selected drops vs top-K
+      def meanPairSim(sets: Map[Long, Seq[Long]]): Double = {
+        val vals = for {
+          (q, ids) <- sets.toSeq
+          a <- ids.take(LlmQueries.MmrK); b <- ids.take(LlmQueries.MmrK) if a != b
+          v <- sims.get((q, a, b))
+        } yield v
+        if (vals.isEmpty) 0.0 else vals.sum / vals.size
+      }
+      val diversityDrop = meanPairSim(brute) - meanPairSim(mmr)
+      // r4 hardness: mined negatives that rank inside the anchor's
+      // UNFILTERED brute top-K — the near-misses a contrastive loss wants
+      val negs = sel(SparkEntry.queries("r4_hard_negatives")(s, sfDir)).toSeq
+        .flatMap { case (q, ids) => ids.map(q -> _) }
+      assert(negs.nonEmpty)
+      val hardness = negs.count { case (q, id) => brute.get(q).exists(_.contains(id)) }
+        .toDouble / negs.size
+      info(f"mmr_diversity_drop $diversityDrop%.4f")
+      assert(diversityDrop > 0.0, "MMR must select a more diverse set than the plain top-K")
+      assertFloors(Seq(("mmr_rank1_parity", parity, 1000L), ("r4_in_brute_topk", hardness, 800L)))
+    }
   }
 
   test("r3 MMR: rank 1 equals brute rank 1; rank 2 trades the redundant runner-up for diversity") {
@@ -927,5 +1069,43 @@ class LlmSpec extends AnyFunSuite {
       assert(capped >= 5000L, s"$algo: every planted row is star-capped")
       assert(nb > hot, s"$algo: healthy buckets must remain")
     }
+  }
+
+  test("evictDir drops every memo keyed by a throwaway corpus dir: a re-run rebuilds all of them") {
+    // r2 (qposts), r7 (first-pass hits), the spread split count and the
+    // JSONL export are dir-keyed memos too: a re-run after evictDir must
+    // rebuild exactly what the first run built, or a stale entry survived
+    val d = Files.createTempDirectory("graft-evict-").toString
+    val src = java.nio.file.Paths.get(dir)
+    val walk = Files.walk(src)
+    try walk.forEach(p => Files.copy(p, java.nio.file.Paths.get(d).resolve(src.relativize(p).toString),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING))
+    finally walk.close()
+    val s = spark.newSession()
+    def builds(): Long = {
+      val c0 = graft.core.SessionMemo.buildCount
+      Seq("r2_hybrid_retrieve", "r7_rocchio_prf", "src_jsonl_read")
+        .foreach(q => SparkEntry.queries(q)(s, d).collect())
+      graft.core.SessionMemo.buildCount - c0
+    }
+    try {
+      val first = builds()
+      assert(first > 0, "the first run must build its memos")
+      assert(builds() === 0L, "a warm re-run must hit every memo")
+      LlmQueries.evictDir(s, d)
+      assert(builds() === first, "after evictDir every memo keyed by the dir must rebuild")
+    } finally {
+      graft.core.SessionMemo.release(s)
+      graft.core.FsUtil.deleteRecursively(d)
+    }
+  }
+
+  test("index sidecars: a non-local master without an index root is refused up front") {
+    assert(LlmQueries.sidecarRoot(None, None, "local[4]") === None, "local masters use a driver temp dir")
+    assert(LlmQueries.sidecarRoot(None, Some("s3a://b/idx/"), "yarn") === Some("s3a://b/idx"))
+    assert(LlmQueries.sidecarRoot(Some("hdfs://nn/idx"), Some("s3a://b/idx"), "yarn") === Some("hdfs://nn/idx"),
+      "the env root wins over the conf root")
+    val e = intercept[IllegalArgumentException](LlmQueries.sidecarRoot(None, None, "spark://host:7077"))
+    assert(e.getMessage.contains("SPARK_GRAFT_INDEX_DIR") && e.getMessage.contains("graft.index.root"))
   }
 }

@@ -40,6 +40,28 @@ class SessionMemoSpec extends AnyFunSuite {
       "this is exactly the round-11 bench-regression signal")
   }
 
+  test("evictDir drops only that session's keys equal to or under the dir, across ALL memos") {
+    val evicted = scala.collection.mutable.ArrayBuffer.empty[String]
+    val m1 = new SessionMemo[String](onEvict = evicted += _)
+    val m2 = new SessionMemo[String](onEvict = evicted += _)
+    val s  = spark.newSession()
+    val other = spark.newSession()
+    m1.getOrElseUpdate(s, "/c/d")("dir")
+    m1.getOrElseUpdate(s, "/c/d/*.parquet")("glob")
+    m2.getOrElseUpdate(s, "/c/d/documents.parquet")("file")
+    m2.getOrElseUpdate(s, "/c/dd")("sibling")       // shares the prefix, not the dir
+    m2.getOrElseUpdate(s, "/c")("parent")
+    m1.getOrElseUpdate(other, "/c/d")("other-session")
+    SessionMemo.evictDir(s, "/c/d/")                 // a trailing slash names the same dir
+    assert(evicted.toSet === Set("dir", "glob", "file"), "onEvict runs on every swept value")
+    assert(m1.getOrElseUpdate(s, "/c/d")("rebuilt") === "rebuilt")
+    assert(m2.getOrElseUpdate(s, "/c/dd")(fail("sibling dir must survive")) === "sibling")
+    assert(m2.getOrElseUpdate(s, "/c")(fail("parent dir must survive")) === "parent")
+    assert(m1.getOrElseUpdate(other, "/c/d")(fail("other session must survive")) === "other-session")
+    SessionMemo.release(s)
+    SessionMemo.release(other)
+  }
+
   test("release(session) unpersists memoized cached frames across ALL memos") {
     // a DEDICATED session: release() sweeps every memo in the process for
     // the given session, so releasing the shared test session here would
